@@ -34,6 +34,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
+
+from ..frames import local_frame
 
 # The exactness-critical fixed-point expressions (_quantize_full, _sq_l2,
 # _subvectors, _pq_lut) are imported from the gate module — single
@@ -51,6 +54,8 @@ from ..queries.similarity import (
     centroid_stride,
     nprobe_eff,
 )
+
+_META = StructType([StructField(n, LongType()) for n in ("nvec", "nlist", "stride")])
 
 
 def build_pq_index(spark: SparkSession, sf_dir: str, path: str) -> None:
@@ -93,9 +98,7 @@ def build_pq_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     # one-row scalar metadata (nvec/nlist/stride): probe time reads these
     # back instead of re-counting the coarse table per call — the counts
     # are invariants of the built index (round-12 advice)
-    meta = spark.createDataFrame(
-        [(qfull_count, coarse_count, stride)], "nvec long, nlist long, stride long"
-    )
+    meta = local_frame(spark, [(qfull_count, coarse_count, stride)], _META)
     meta.coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
 
 

@@ -99,10 +99,11 @@ def scd2_apply_snapshot(
         .when(diff, F.lit("changed"))
         .otherwise(F.lit("unchanged"))
         .alias("_status"),
-    ).cache()
-    # deleted is read twice (affected_keys + tombstones) but is dim-scale;
-    # recomputing the anti join is cheaper than pinning another cache entry
-    # for the lifetime of a long-running multi-day ingest
+    )
+    # classified and deleted are each read twice (affected_keys + opened
+    # rows) but are dim-scale broadcast joins over a LocalRelation snapshot
+    # and a parquet hist: recomputing them is cheaper than pinning cache
+    # entries for the lifetime of a long-running multi-day ingest
     deleted = cur.join(snap.select(key), key, "left_anti")
 
     # 'new' is included so that a re-added key's open TOMBSTONE gets closed

@@ -44,6 +44,10 @@ class PipelineState:
     compat_hist_join: bool = True
     archive: bool = True
     extra: dict = field(default_factory=dict)
+    # the current day's cached raw transactions: split_corrupt caches them so
+    # the dead-letter frame stays readable after the file is archived; the
+    # next run_day drops it, so a multi-day loop pins at most one day
+    day_cache: DataFrame | None = field(default=None, init=False, repr=False)
 
 
 def run_day(
@@ -66,9 +70,13 @@ def run_day(
     term_path = os.path.join(data_dir, f"terminals_{date}.xlsx")
     bl_path = os.path.join(data_dir, f"passport_blacklist_{date}.xlsx")
 
+    if state.day_cache is not None:
+        state.day_cache.unpersist()
+
     # per-run rebuild: seed dims + day fact + cumulative blacklist
     dims = read_seed_dims(spark, state.seed_dump_path)
-    clean_tx, corrupt_tx = split_corrupt(read_transactions_csv(spark, tx_path))
+    state.day_cache = read_transactions_csv(spark, tx_path)
+    clean_tx, corrupt_tx = split_corrupt(state.day_cache)
     state.extra["corrupt_transactions"] = corrupt_tx  # dead-letter handle
     transactions = typed_transactions(clean_tx)
     blacklist = typed_blacklist(read_xlsx_df(spark, bl_path, BLACKLIST_RAW))

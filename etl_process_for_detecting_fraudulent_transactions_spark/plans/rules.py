@@ -5,11 +5,13 @@ Each rule takes the day's typed DataFrames and returns report-shaped rows
 them to REP_FRAUD with a stamped report_dt.
 
 Scale notes: all dims (cards/accounts/clients/blacklist/terminals-hist) are
-small relative to the fact, so every identity lookup is an explicit
-``broadcast`` — on a 1000-executor cluster the fact never shuffles for these
-joins. The only unavoidable fact shuffles are the per-card window/groupBy in
-Q3/Q4; both partition by ``card_num``, so Catalyst reuses one exchange per
-rule chain. AQE handles hot-card skew.
+small relative to the fact. The driver-built dims are Arrow-backed
+``LocalRelation`` frames (``frames.local_frame``) and the hist is a parquet
+scan, so each reports its real size and Catalyst plans every identity
+lookup as a broadcast hash join — the fact never shuffles for these joins
+(pinned by tests/test_plans.py). The only fact shuffles are the per-card
+windows of Q3 and Q4, one ``card_num`` exchange each; the groupBy after
+Q3's window reuses its partitioning. AQE handles hot-card skew.
 """
 
 from __future__ import annotations
@@ -137,6 +139,14 @@ def city_fraud(
     """Q3: cards transacting in >1 distinct city; one row per card at the max
     flagged boundary timestamp (rep_fraud.py:110-184).
 
+    The reference first keeps only cards with ``count(distinct city) > 1``
+    (rep_fraud.py:119-128). That pre-filter is implied by the flag itself
+    and is not repeated here: a row passes ``terminal_city !=
+    lead_terminal_city`` only when both cities are non-NULL and differ, i.e.
+    when its card already has two distinct non-NULL cities, and dropping
+    whole cards leaves every kept card's window untouched (pinned by
+    tests/test_rules.py).
+
     Reference quirks, both reproducible and both fixable by flag:
     - ``compat_hist_join=True`` joins the FULL history (no version filter),
       duplicating each transaction once per history version of its terminal
@@ -148,23 +158,20 @@ def city_fraud(
     """
     hist = terminals_hist if compat_hist_join else current_view(terminals_hist)
     city_dim = F.broadcast(
-        hist.select(F.col("terminal_id").alias("terminal"), "terminal_city")
+        hist.select(
+            F.col("terminal_id").alias("terminal"), "terminal_city", "effective_from"
+        )
     )
-    tx_city = transactions.select("card_num", "trans_date", "terminal").join(
+    tx_city = transactions.select("card_num", "trans_date", "trans_id", "terminal").join(
         city_dim, "terminal", "left"
     )
 
-    multi_city_cards = (
-        tx_city.groupBy("card_num")
-        .agg(F.count_distinct("terminal_city").alias("cnt_city"))
-        .filter(F.col("cnt_city") > 1)
-        .select("card_num")
-    )
-
-    w = Window.partitionBy("card_num").orderBy("trans_date")
+    # rows tied on trans_date (the full-hist join repeats a transaction once
+    # per version of its terminal) are ordered by transaction, then version,
+    # so lead() sees one fixed sequence whatever the physical row order
+    w = Window.partitionBy("card_num").orderBy("trans_date", "trans_id", "effective_from")
     seq = (
-        tx_city.join(F.broadcast(multi_city_cards), "card_num", "inner")
-        .withColumn("lead_trans_date", F.lead("trans_date").over(w))
+        tx_city.withColumn("lead_trans_date", F.lead("trans_date").over(w))
         .withColumn("lead_terminal_city", F.lead("terminal_city").over(w))
     )
     if compat_time_filter:

@@ -3,8 +3,10 @@
 The reference seeds cards/accounts/clients from an 889-line SQL dump
 re-executed every run (SURVEY §2.1 S3; ddl_dml.sql, data_to_db.py:28-87).
 We don't embed a SQL engine for that: the dump is data, so we extract the
-INSERT literals on the driver (dims are tiny — 322 rows) and create typed
-DataFrames, applying the same column renames the reference applies on load
+INSERT literals on the driver (dims are tiny — 322 rows) and build typed
+Arrow-backed ``LocalRelation`` frames (``frames.local_frame``: no Python
+worker scans them, and their real size lets every lookup join broadcast),
+applying the same column renames the reference applies on load
 (account→account_num, patronymic→patrinymic; data_to_db.py:31-83).
 """
 
@@ -15,6 +17,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..frames import local_frame
 from ..schemas import DIM_ACCOUNTS, DIM_CARDS, DIM_CLIENTS
 
 _INSERT_RE = re.compile(
@@ -86,7 +89,7 @@ def read_seed_dims(spark: SparkSession, dump_path: str) -> dict[str, DataFrame]:
         for r in tables.get("clients", [])
     ]
     return {
-        "cards": spark.createDataFrame(cards, schema=DIM_CARDS),
-        "accounts": spark.createDataFrame(accounts, schema=DIM_ACCOUNTS),
-        "clients": spark.createDataFrame(clients, schema=DIM_CLIENTS),
+        "cards": local_frame(spark, cards, DIM_CARDS),
+        "accounts": local_frame(spark, accounts, DIM_ACCOUNTS),
+        "clients": local_frame(spark, clients, DIM_CLIENTS),
     }

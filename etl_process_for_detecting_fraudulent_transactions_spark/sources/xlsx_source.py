@@ -6,8 +6,11 @@ so we parse it directly: shared strings, inline strings, numbers, and
 date-formatted numeric cells (Excel 1900 serial dates via numFmt).
 
 Files are tiny dimension snapshots (150 rows); driver-side parse followed by
-``spark.createDataFrame`` is the right scale trade-off. A 100 TB deployment
-would never ship xlsx for big data; this source exists for format parity.
+``frames.local_frame`` is the right scale trade-off: the rows reach the JVM
+as an Arrow-backed ``LocalRelation`` whose real size lets the SCD2 classify
+and the blacklist lookup broadcast, and no Python worker ever scans them.
+A 100 TB deployment would never ship xlsx for big data; this source exists
+for format parity.
 """
 
 from __future__ import annotations
@@ -19,6 +22,8 @@ from xml.etree import ElementTree as ET
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+from ..frames import local_frame
 
 _NS = {"m": "http://schemas.openxmlformats.org/spreadsheetml/2006/main"}
 _EPOCH_1900 = _dt.datetime(1899, 12, 30)  # Excel 1900 date system epoch
@@ -146,4 +151,4 @@ def read_xlsx_df(
             continue
         norm.append([str(v) if isinstance(v, (int, float)) and f.dataType.typeName() == "string" else v
                      for v, f in zip(r, schema.fields)])
-    return spark.createDataFrame(norm, schema=schema)
+    return local_frame(spark, norm, schema)

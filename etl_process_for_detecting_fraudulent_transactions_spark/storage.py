@@ -20,6 +20,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from .frames import local_frame
+
 
 class ParquetStore:
     def __init__(self, spark: SparkSession, root: str):
@@ -34,10 +36,13 @@ class ParquetStore:
         return os.path.isdir(self.path(name))
 
     def read(self, name: str, schema: StructType | None = None) -> DataFrame:
+        """The table at ``name``; with ``schema``, a missing table reads as an
+        empty frame of that schema (the first-run bootstrap) — an empty
+        ``LocalRelation``, which the optimizer folds away."""
         if not self.exists(name):
             if schema is None:
                 raise FileNotFoundError(self.path(name))
-            return self.spark.createDataFrame([], schema=schema)
+            return local_frame(self.spark, [], schema)
         reader = self.spark.read
         if schema is not None:
             reader = reader.schema(schema)

@@ -741,3 +741,40 @@ def test_ann_recall_audit_never_sorts(spark, sf_dir):
     plan = _plan(ann_recall_audit(spark, sf_dir))
     assert "SortMergeJoin" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan
+
+
+def test_daily_append_plan_broadcasts_every_lookup(spark, tiny_corpus, tmp_path):
+    """The day's REP_FRAUD append (Q1–Q4 union) on the generated corpus:
+    every dim lookup is a broadcast hash join over an in-JVM LocalRelation
+    or the hist parquet scan — no sort-merge join, no Python-RDD scan —
+    and the only hash exchanges are Q3's and Q4's per-card windows plus
+    the blacklist distinct."""
+    import datetime as dt
+    import os
+
+    from etl_process_for_detecting_fraudulent_transactions_spark.plans.pipeline import (
+        PipelineState,
+        run_day,
+    )
+    from etl_process_for_detecting_fraudulent_transactions_spark.storage import ParquetStore
+
+    class RecordingStore(ParquetStore):
+        def append(self, df, name, partition_by=None):
+            self.appended = df
+            super().append(df, name, partition_by)
+
+    corpus_dir, manifest = tiny_corpus
+    day = manifest["days"][0]
+    store = RecordingStore(spark, str(tmp_path / "store"))
+    state = PipelineState(store=store, seed_dump_path=os.path.join(corpus_dir, "ddl_dml.sql"),
+                          archive=False)
+    run_day(spark, state, os.path.join(corpus_dir, "landing"), run_date=day["date"],
+            run_ts=dt.datetime(2021, 3, 1, 12))
+
+    plan = _plan(store.appended)
+    assert "SortMergeJoin" not in plan
+    assert "ExistingRDD" not in plan
+    assert "LogicalRDD" not in store.appended._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("BroadcastHashJoin") >= 10
+    assert plan.count("Exchange hashpartitioning(card_num") == 2
+    assert plan.count("Exchange hashpartitioning") <= 3
